@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line the driver parses.
@@ -37,16 +36,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Context.cpus
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Context.local(cpus).spark
     // Calibration anchor: a fixed pure-CPU workload (no I/O, no shuffle)
     // timed at bench start. Identical code measured across sessions varies
     // ±16% uniformly with host CPU steal (PLANS.md §8b); dividing totals by
@@ -55,7 +47,7 @@ object Bench {
     def calibPass(): Double = {
       import org.apache.spark.sql.functions.{col, sum}
       val t0 = System.nanoTime()
-      spark.range(0, 400000000L, 1, cpus.toInt)
+      spark.range(0, 400000000L, 1, cpus)
         .select(sum(col("id") * 2654435761L % 1000003L)).head
       (System.nanoTime() - t0) / 1e9
     }
@@ -75,7 +67,7 @@ object Bench {
       import org.apache.spark.sql.functions.{col, expr, sum}
       def pass(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0, 750000L, 1, cpus.toInt)
+        spark.range(0, 750000L, 1, cpus)
           .select(
             expr("transform(sequence(0, 63), j -> " +
               "CAST(pmod(id * 2654435761 + j * 40503, 997) / 997.0 AS FLOAT))")
@@ -114,12 +106,8 @@ object Bench {
       val t0 = System.nanoTime()
       try run(name) catch { case _: Throwable => failures(name) += 1 }
       val dt = (System.nanoTime() - t0) / 1e9
-      // drop this query's persists before the next: the ledger releases
-      // exactly what the body registered; clearCache backstops anything
-      // cached outside the tracked path
-      graft.operators.Persisted.releaseAll(spark)
-      graft.plans.RollupRewrite.clear(spark)
-      spark.catalog.clearCache()
+      // drop this query's persists and rollups before the next
+      Context.release(spark)
       dt
     }
     val calib = calibrate()
@@ -127,9 +115,7 @@ object Bench {
     val names = allQueries.keys.toSeq.sorted
     names.foreach { n => // warm pass (failures counted here too)
       try run(n) catch { case _: Throwable => failures(n) += 1 }
-      graft.operators.Persisted.releaseAll(spark)
-      graft.plans.RollupRewrite.clear(spark)
-      spark.catalog.clearCache()
+      Context.release(spark)
     }
     // Interleave passes round-robin (pass 0 of all queries, then pass 1, ...)
     // so per-query samples are spread across the session: a slow phase (GC,

@@ -60,14 +60,30 @@ class Context(val spark: SparkSession) {
 }
 
 object Context {
-  /** Standalone session with the project's standard config. */
-  def local(cores: Int = 4): Context = new Context(
-    SparkSession.builder()
+  /** Worker threads for the mains: `SPARK_GRAFT_CPUS`, else the host's. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one place a session is built, with the project's standard config;
+    * a caller needing another AQE setting sets it on the returned session. */
+  def local(cores: Int = 4): Context = {
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate())
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    new Context(spark)
+  }
+
+  /** Release what one query took before the next starts: its ledgered
+    * persists, its rollups, and (backstop) any cache outside the ledger. */
+  def release(spark: SparkSession): Unit = {
+    graft.operators.Persisted.releaseAll(spark)
+    graft.plans.RollupRewrite.clear(spark)
+    spark.catalog.clearCache()
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: print the formatted physical plan and wall time of one
   * named query. `runMain graft.Explain <queryName> [sfDir]`.
   *
@@ -12,19 +10,6 @@ import org.apache.spark.sql.SparkSession
   * writes `<outDir>/<query>_<suffix>.txt` for each query.
   */
 object Explain {
-  private def mkSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Formatted physical plan as a string (what df.explain("formatted")
     * prints), via the classic Dataset's queryExecution. */
   private def formatted(df: org.apache.spark.sql.DataFrame): String =
@@ -32,38 +17,37 @@ object Explain {
       .queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
 
-  private def releaseAll(spark: SparkSession): Unit = {
-    graft.operators.Persisted.releaseAll(spark)
-    graft.plans.RollupRewrite.clear(spark)
-    spark.catalog.clearCache()
+  /** Formatted plan and cold/warm noop-sink wall times of one query,
+    * released after each pass. */
+  private def explain(spark: org.apache.spark.sql.SparkSession, name: String,
+      sfDir: String): (String, Double, Double) = {
+    val fn = (SparkEntry.queries ++ SparkEntry.benchOnly)(name)
+    val plan = formatted(fn(spark, sfDir))
+    def pass(): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      Context.release(spark)
+      dt
+    }
+    val cold = pass()
+    (plan, cold, pass())
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.nonEmpty && args(0) == "--dump") {
-      if (args.length < 4) {
-        System.err.println(
-          "usage: Explain --dump <outDir> <suffix> <sfDir> <query...>")
-        sys.exit(2)
-      }
+    if (args.nonEmpty && args(0) == "--dump" && args.length < 4) {
+      System.err.println(
+        "usage: Explain --dump <outDir> <suffix> <sfDir> <query...>")
+      sys.exit(2)
+    }
+    val spark = Context.local(Context.cpus).spark
+    if (args(0) == "--dump") {
       val Array(_, outDir, suffix, sfDir) = args.take(4)
-      val names = args.drop(4)
-      val spark = mkSession()
-      val all = SparkEntry.queries ++ SparkEntry.benchOnly
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      names.foreach { name =>
-        val plan = formatted(all(name)(spark, sfDir))
-        def pass(): Double = {
-          val t0 = System.nanoTime()
-          all(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          releaseAll(spark)
-          dt
-        }
-        val cold = pass()
-        val warm = pass()
+      args.drop(4).foreach { name =>
+        val (plan, cold, warm) = explain(spark, name, sfDir)
         val hdr = f"-- $name @ $sfDir cold=$cold%.2fs warm=$warm%.2fs" +
-          s" cpus=${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}\n"
+          s" cpus=${Context.cpus}\n"
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"), hdr + plan)
         println(f"[explain] $name cold=$cold%.2fs warm=$warm%.2fs")
@@ -73,16 +57,10 @@ object Explain {
     }
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = mkSession()
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.explain("formatted")
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    println(f"[explain] $name cold run: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val t1 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    println(f"[explain] $name warm run: ${(System.nanoTime() - t1) / 1e9}%.2f s")
+    val (plan, cold, warm) = explain(spark, name, sfDir)
+    println(plan)
+    println(f"[explain] $name cold run: $cold%.2f s")
+    println(f"[explain] $name warm run: $warm%.2f s")
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -36,6 +36,22 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 object PlanCensus {
 
+  /** Every node of a physical plan, walked AQE-aware: `plan.collect` stops
+    * at an `AdaptiveSparkPlanExec` leaf, this descends into its current plan
+    * and each query stage's plan. On a static (AQE-off) plan it is exactly
+    * `plan.collect`'s node set. Every plan count here and in ScaleProbe
+    * goes through it. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case p => p.children.flatMap(nodes)
+  })
+
+  /** Number of nodes of `plan` that are a `T`. */
+  def count[T <: SparkPlan](plan: SparkPlan)(
+      implicit ct: scala.reflect.ClassTag[T]): Int =
+    nodes(plan).count(ct.runtimeClass.isInstance)
+
   /** Unordered floating-point aggregate sites: Sum/Average over a
     * Double/Float child in a (final/complete-mode) hash/sort aggregate.
     * These are the q_heaps_law bug class — their result depends on the
@@ -49,14 +65,14 @@ object PlanCensus {
     * plan_diff CHANGE line that must be classified in PLANS.md §7u's
     * double-aggregate census the round it lands.
     */
-  def doubleAggs(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+  def doubleAggs(plan: SparkPlan): Int = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       Average, Complete, Final, Sum}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.types.{DoubleType, FloatType}
     def isFp(dt: org.apache.spark.sql.types.DataType): Boolean =
       dt == DoubleType || dt == FloatType
-    plan.collect { case a: BaseAggregateExec =>
+    nodes(plan).collect { case a: BaseAggregateExec =>
       a.aggregateExpressions.count { ae =>
         (ae.mode == Final || ae.mode == Complete) &&
         (ae.aggregateFunction match {
@@ -73,9 +89,8 @@ object PlanCensus {
     * bytecode limit (Spark's own two fallback conditions in
     * WholeStageCodegenExec.doExecute).
     */
-  def codegenFallbacks(plan: org.apache.spark.sql.execution.SparkPlan,
-                       hugeMethodLimit: Int): Int =
-    plan.collect { case w: WholeStageCodegenExec => w }.map { w =>
+  def codegenFallbacks(plan: SparkPlan, hugeMethodLimit: Int): Int =
+    nodes(plan).collect { case w: WholeStageCodegenExec => w }.map { w =>
       try {
         val (_, source) = w.doCodeGen()
         val (_, stats) = org.apache.spark.sql.catalyst.expressions.codegen
@@ -86,26 +101,18 @@ object PlanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLAN_CENSUS.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Context.local(Context.cpus).spark
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
       val cell =
         try {
           val plan = fn(spark, sfDir).queryExecution.executedPlan
-          val scans = plan.collect { case f: FileSourceScanExec => f }.size
-          val exch = plan.collect { case e: ShuffleExchangeExec => e }.size
-          val bc = plan.collect { case b: BroadcastExchangeExec => b }.size
-          val sorts = plan.collect { case s: SortExec => s }.size
-          val wsc = plan.collect { case w: WholeStageCodegenExec => w }.size
-          val wins = plan.collect { case w: WindowExec => w }.size
+          val scans = count[FileSourceScanExec](plan)
+          val exch = count[ShuffleExchangeExec](plan)
+          val bc = count[BroadcastExchangeExec](plan)
+          val sorts = count[SortExec](plan)
+          val wsc = count[WholeStageCodegenExec](plan)
+          val wins = count[WindowExec](plan)
           val hugeLimit =
             spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535").toInt
           val fb = codegenFallbacks(plan, hugeLimit)
@@ -116,11 +123,7 @@ object PlanCensus {
         } catch {
           case e: Throwable =>
             s"""{"error":"${e.getClass.getSimpleName}"}"""
-        } finally {
-          graft.operators.Persisted.releaseAll(spark)
-          graft.plans.RollupRewrite.clear(spark)
-          spark.catalog.clearCache()
-        }
+        } finally Context.release(spark)
       s"""  "$n": $cell"""
     }
     val json = "{\n" + rows.mkString(",\n") + "\n}\n"

@@ -119,23 +119,21 @@ object ScaleProbe {
         s""""cartesians":$cartesians,"nested_loops":$nestedLoops}"""
   }
 
-  def shape(plan: SparkPlan): PlanShape = PlanShape(
-    exchanges = plan.collect { case e: ShuffleExchangeExec => e }.size,
-    broadcasts = plan.collect { case b: BroadcastExchangeExec => b }.size,
-    sorts = plan.collect { case s: SortExec => s }.size,
-    scans = plan.collect { case f: FileSourceScanExec => f }.size,
-    codegen = plan.collect { case w: WholeStageCodegenExec => w }.size,
-    windows = plan.collect { case w: WindowExec => w }.size,
-    globalWindows = plan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty => w
-    }.size,
-    cartesians = plan.collect { case c: CartesianProductExec => c }.size,
-    nestedLoops = plan.collect { case n: BroadcastNestedLoopJoinExec => n }.size)
-
-  private def release(spark: SparkSession): Unit = {
-    graft.operators.Persisted.releaseAll(spark)
-    graft.plans.RollupRewrite.clear(spark)
-    spark.catalog.clearCache()
+  /** Shape over PlanCensus's AQE-aware walk: the probe runs with AQE on,
+    * where a plain `plan.collect` stops at the adaptive root. */
+  def shape(plan: SparkPlan): PlanShape = {
+    import PlanCensus.count
+    PlanShape(
+      exchanges = count[ShuffleExchangeExec](plan),
+      broadcasts = count[BroadcastExchangeExec](plan),
+      sorts = count[SortExec](plan),
+      scans = count[FileSourceScanExec](plan),
+      codegen = count[WholeStageCodegenExec](plan),
+      windows = count[WindowExec](plan),
+      globalWindows = PlanCensus.nodes(plan)
+        .count { case w: WindowExec => w.partitionSpec.isEmpty; case _ => false },
+      cartesians = count[CartesianProductExec](plan),
+      nestedLoops = count[BroadcastNestedLoopJoinExec](plan))
   }
 
   /** warm + `passes` timed noop-sink executions; returns (min, shape). */
@@ -146,11 +144,11 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      release(spark)
+      Context.release(spark)
       dt
     }
     val sh = shape(fn(spark, dir).queryExecution.executedPlan)
-    release(spark)
+    Context.release(spark)
     pass() // warm (JIT, codegen cache, parquet footers)
     val best = Seq.fill(passes)(pass()).min
     (best, sh)
@@ -161,15 +159,7 @@ object ScaleProbe {
     val baseDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val probeDir = if (args.length > 2) args(2) else "target/sf1probe"
     val out = if (args.length > 3) args(3) else "BENCH_SF1_PROBE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Context.local(Context.cpus).spark
 
     if (mode == "gen") {
       generate(spark, baseDir, probeDir)
@@ -194,7 +184,7 @@ object ScaleProbe {
           s""""plan_sf01":${shBase.json},"plan_x10":${shProbe.json}}"""
       } catch {
         case e: Throwable =>
-          release(spark)
+          Context.release(spark)
           flags += s"$name: ERROR ${e.getClass.getSimpleName}"
           s"""{"error":"${e.getClass.getSimpleName}: ${
             Option(e.getMessage).getOrElse("").take(120)

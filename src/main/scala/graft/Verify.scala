@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,16 @@ object Verify {
     // optional 3rd+ args: only dump these queries (local iteration aid)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Context.local(Context.cpus).spark
     // SPARK_GRAFT_AQE=false gives the determinism sweep a second axis
     // beyond parallelism: AQE re-plans exchanges at runtime (coalesced
     // partitions, demoted broadcasts), which moves partial-aggregation
     // trees — gated VALUES must not move with them
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.adaptive.enabled",
+      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     new java.io.File(outDir).mkdirs()
+    // query → (exception class, message): failures land in failures.json
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, (String, String)]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -32,14 +25,11 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = (e.getClass.getName, String.valueOf(e.getMessage))
       }
-      // queries persistTracked() intermediates; the ledger releases
-      // exactly what this query registered so cache doesn't accumulate
-      // across the whole inventory run (clearCache as backstop for any
-      // untracked cache)
-      graft.operators.Persisted.releaseAll(spark)
-      graft.plans.RollupRewrite.clear(spark)
-      spark.catalog.clearCache()
+      // release exactly what this query took so cache doesn't accumulate
+      // across the whole inventory run
+      Context.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -56,6 +46,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = failures.map { case (k, (cls, msg)) =>
+      s"""${q(k)}: {"class": ${q(cls)}, "message": ${q(msg)}}"""
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failed)
     spark.stop()
   }
 }

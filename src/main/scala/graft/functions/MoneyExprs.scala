@@ -27,11 +27,14 @@ import org.apache.spark.sql.types._
   * plain-double 0.250 s, double→decimal 0.578 s, long→decimal 0.406 s,
   * plain-long 0.241 s, this 0.26 s).
   *
-  * Exactness domain: per-row |value| ≤ 2⁴⁰ (the 2-dp money grid gives
-  * ≤ ~1.3e9 for price×(100−disc) products — 19 bits spare), |total| <
-  * 2⁶³·2⁵⁹ ≈ 5.3e36 (a 100 TB corpus money sum is ~1e22 — fourteen
-  * orders of headroom). Within it the result is the EXACT integer sum at
-  * any partitioning, any merge order: bit-identical to
+  * Exactness domain: per-row |value| far below 2⁶³ − 2⁵⁹, so `lo + v`
+  * cannot wrap before the carry check. The worst in-repo case is ~2⁴⁷
+  * (the corpus-sized moment sums of q_corr_matrix / q_icc; money cents
+  * and price×(100−disc) products stay ≤ ~1.3e9); see the companion
+  * object's `sum`. |total| < 2⁶³·2⁵⁹ ≈ 5.3e36 (a 100 TB corpus money
+  * sum is ~1e22 — fourteen orders of headroom). Within it the result is
+  * the EXACT integer sum at any partitioning, any merge order:
+  * bit-identical to
   * `sum(cents.cast("decimal(38,0)"))`, so every ExactMoney DuckDB twin
   * (textual `sum(CAST(round(x*100) AS BIGINT))` oracles) remains valid
   * unchanged.

@@ -17,8 +17,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    SparkSession (a one-token swap for the bare `.persist()` it
   *    replaces);
   *  - the RUNNER releases: [[releaseAll]] unpersists exactly the frames its
-  *    session registered — `Verify.main` after each per-query parquet dump,
-  *    `Bench.timedPass` after every timed pass, `SparkSpec` between suites.
+  *    session registered — every main through `Context.release` after each
+  *    query, `SparkSpec` between suites.
   *    (`spark.catalog.clearCache()` would also evict them, but it nukes
   *    every cached relation in the session — including test fixtures and
   *    cross-query static tables — so the ledger releases only what query

@@ -19,8 +19,8 @@ import graft.functions.{Text, Vectors}
   * branches of the SAME query plan (pair sets, meta joins) and do NOT
   * unpersist them — the cache must outlive the caller's single
   * materializing action, which no code inside a lazy plan builder can
-  * observe. The harness owns the boundary: Verify and Bench call
-  * `spark.catalog.clearCache()` after each query's action, so these
+  * observe. The runner owns the boundary: every main calls
+  * `Context.release` after each query's action, so these
   * caches are query-scoped, never session-accumulating. Iterative
   * algorithms ([[connectedComponents]]) DO unpersist eagerly — their
   * superseded iterations die inside the builder where the fixpoint loop

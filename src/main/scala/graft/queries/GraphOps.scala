@@ -84,7 +84,11 @@ object GraphOps {
         // job as chained stages (the marked RDDs still cache on first
         // computation, so the per-round broadcast build of nRow cannot
         // re-run earlier rounds). Loops whose round derives a scalar
-        // broadcast FROM the loop frame (q_hits) must stay eager.
+        // broadcast FROM the loop frame (q_hits) are lazy-safe too: that
+        // broadcast's build is the round's first action and caches the
+        // frame. Only a loop that runs an eager action on each round's
+        // frame before using it (DedupOps's sigma() convergence test)
+        // keeps the eager form.
         pr = ew.join(pr, ew("src") === pr("node"))
           .groupBy(col("dst"))
           .agg(sum(col("pr") / col("outdeg")).as("m"))

@@ -67,8 +67,8 @@ object StreamGateOps {
     // SINGLE-THREADED-RUNNER ASSUMPTION: the two confs below are
     // session-global; a query planned CONCURRENTLY on this session during
     // a replay would silently pick up 4 shuffle partitions. Every in-repo
-    // runner (Bench/Verify/Explain/PlanCensus) executes queries strictly
-    // sequentially; a parallel harness must clone the session (or scope
+    // runner (the mains on their `Context.local` session) executes queries
+    // strictly sequentially; a parallel harness must clone the session (or scope
     // the confs per-thread) before interleaving work with a replay.
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevRetain = s.conf.getOption("spark.sql.streaming.minBatchesToRetain")

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Physical-layout scale patterns: bucketed co-located joins (zero-shuffle)
   * and partition-pruned scans. These are the two levers that keep a 100 TB
@@ -15,18 +14,6 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
   private def executed(df: org.apache.spark.sql.DataFrame) = {
     df.collect() // force AQE finalization
     df.queryExecution.executedPlan
-  }
-
-  private def shuffles(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val extra = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case _ => Seq.empty
-      }
-      Seq(p) ++ (p.children ++ p.subqueries).flatMap(walk) ++ extra
-    }
-    walk(plan).count(_.isInstanceOf[ShuffleExchangeExec])
   }
 
   test("bucketed tables join with ZERO shuffle (co-located layout)") {
@@ -55,7 +42,7 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
       .agg(count(lit(1)).as("n"))
     // the join itself must not shuffle either side: bucket layout IS the
     // hash partitioning. (The aggregation on the same key is also free.)
-    val nShuffles = shuffles(executed(joined))
+    val nShuffles = PlanCensus.count[ShuffleExchangeExec](executed(joined))
     assert(nShuffles == 0, s"expected zero shuffles, got $nShuffles\n" +
       joined.queryExecution.executedPlan.toString.take(3000))
     // result parity with the plain (shuffling) join

@@ -26,6 +26,29 @@ class PersistLedgerSpec extends AnyFunSuite with SparkSpec {
     Persisted.releaseAll()
   }
 
+  test("Context.release drains the ledger and the rollup registry") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    Context.release(spark)
+    // q_mv_rewrite's own coarse aggregate: navigates to the registered
+    // rollup (no fact scan) exactly while the rollup is registered.
+    // sparkPlan, not executedPlan: AQE hides children from collect
+    def readsFact: Boolean = Tables(spark, sf, "lineitem")
+      .groupBy(col("l_returnflag"))
+      .agg(sum(col("l_quantity").cast("long")).as("sum_qty"),
+        count(lit(1)).as("n_rows"))
+      .queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec
+          if f.metadata.get("Location").exists(_.contains("lineitem")) => f
+      }.nonEmpty
+    q("q_mv_rewrite")
+    assert(Persisted.pending(spark) > 0, "q_mv_rewrite persisted nothing")
+    assert(!readsFact, "q_mv_rewrite registered no rollup")
+    Context.release(spark)
+    assert(Persisted.pending(spark) == 0, "Context.release left ledgered frames")
+    assert(readsFact, "a registered rollup outlived Context.release")
+  }
+
   test("no bare persist() remains in query bodies (ledger owns every cache)") {
     // source-level guard over ALL of src/main/scala/graft: a future body
     // calling .persist() directly — in queries/, functions/, streaming/,

@@ -384,8 +384,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       assert(factScans.isEmpty, s"$n re-scans the fact beside its census")
       assert(p.toString.contains("InMemoryTableScan"),
         s"$n does not read its persisted census")
-      graft.operators.Persisted.releaseAll(spark)
-      spark.catalog.clearCache()
+      Context.release(spark)
     }
     // Q13 shape: the join stays LEFT OUTER (zero-order customers are the
     // point); the priority filter lives in the join, not a WHERE
@@ -431,16 +430,14 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       }
       assert(factScans.size <= 1,
         s"$n scans the fact ${factScans.size}x beside its cached census")
-      graft.operators.Persisted.releaseAll(spark)
-      spark.catalog.clearCache()
+      Context.release(spark)
     }
     // the heap operator must be visible in at least the inline variant
     val inline = physical("q_theta_sketch")
       .collect { case t: graft.plans.TopKPerKeyExec => t }
     assert(inline.size >= 2,
       "q_theta_sketch lost the partial+final TopKPerKeyExec pair")
-    graft.operators.Persisted.releaseAll(spark)
-    spark.catalog.clearCache()
+    Context.release(spark)
   }
 
   test("rollup advisor cubes the census, not the fact") {
@@ -1032,11 +1029,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
         physical(name).collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }
-      } finally {
-        graft.operators.Persisted.releaseAll(spark)
-        graft.plans.RollupRewrite.clear(spark)
-        spark.catalog.clearCache()
-      }
+      } finally Context.release(spark)
       wins.collect { case w if !bounded(w.child) => name }
     }.distinct
     assert(offenders.isEmpty,
@@ -1056,11 +1049,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       "q_hurst", "q_anova", "q_levene", "q_dispersion", "q_assortativity")
     fits.foreach { name =>
       val n = try PlanCensus.doubleAggs(physical(name))
-      finally {
-        graft.operators.Persisted.releaseAll(spark)
-        graft.plans.RollupRewrite.clear(spark)
-        spark.catalog.clearCache()
-      }
+      finally Context.release(spark)
       assert(n == 0, s"$name has $n unordered double-typed aggregates — " +
         "its fit moments must stay exact-decimal / integer")
     }

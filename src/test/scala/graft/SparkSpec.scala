@@ -1,26 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
-/** One shared local session for all suites (suites run in one forked JVM).
-  * Each suite drains the persist ledger on exit — the test-side half of
-  * the Persisted ownership contract (Verify per dump, Bench per pass,
-  * suites here), so caches never accumulate across the 18 suites. */
+/** One shared local session for all suites (suites run in one forked JVM),
+  * built by `Context.local` like every main's. Each suite drains the
+  * persist ledger on exit — the test-side half of the Persisted ownership
+  * contract (`Context.release` after every query in the mains, suites
+  * here), so caches never accumulate across the suites. */
 trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
 
   override def afterAll(): Unit = {
     graft.operators.Persisted.releaseAll(spark)
     super.afterAll()
   }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Context.local(cores = 4).spark
 
   /** Smallest scale factor: fast, still exercises every operator. */
   val sf = "/root/testdata/sf0.001"
