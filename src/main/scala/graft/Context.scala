@@ -64,10 +64,17 @@ object Context {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** The one place a session is built, with the project's standard config;
-    * a caller needing another AQE setting sets it on the returned session. */
+  /** The one place a session is built, with the project's standard config
+    * and the planner extensions (the `TopKPerKey` strategy, rollup
+    * navigation), installed here once so `newSession()`/`cloneSession()`
+    * carry them and no query changes the planner while it runs; a caller
+    * needing another AQE setting sets it on the returned session. */
   def local(cores: Int = 4): Context = {
     val spark = SparkSession.builder()
+      .withExtensions { ext =>
+        ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+        ext.injectOptimizerRule(_ => graft.plans.RollupRewrite)
+      }
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

@@ -7,12 +7,13 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the embedding hot loops.
   *
-  * The HOF formulations in [[Vectors]] evaluate one interpreted lambda per
-  * element (`aggregate`/`zip_with`/`transform` are CodegenFallback AND pay a
-  * closure call per element). These expressions do the same IEEE double
-  * arithmetic in tight JVM loops — one virtual call per ROW. The fold order
-  * is strictly left-to-right, which is also what DuckDB's `list_reduce`
-  * does, so results are bit-identical to the SQL oracles
+  * Higher-order-function formulations of the same math evaluate one
+  * interpreted lambda per element (`aggregate`/`zip_with`/`transform` are
+  * CodegenFallback AND pay a closure call per element). These expressions
+  * do the same IEEE double arithmetic in tight JVM loops — one virtual
+  * call per ROW. The fold order is strictly left-to-right, which is also
+  * what DuckDB's `list_reduce` does, so results are bit-identical to the
+  * SQL oracles
   * (see [[VectorExprs.cosineSql]] / [[VectorExprs.weightsSqlLiteral]]).
   *
   * Since r17 all of them implement `doGenCode` (via the kernel-codegen
@@ -247,7 +248,7 @@ object VectorExprs {
   import org.apache.spark.sql.graftx.Bridge.{column, expression}
 
   /** Deterministic pseudo-random hyperplane weight for (plane, dim): uniform
-    * in [-1, 1), splitmix64-style mix. Same function as Vectors.planeWeight.
+    * in [-1, 1), splitmix64-style mix.
     */
   def planeWeight(plane: Int, dim: Int): Double = {
     var h = plane.toLong * 0x9E3779B97F4A7C15L + dim.toLong * 0xC2B2AE3D27D4EB4FL

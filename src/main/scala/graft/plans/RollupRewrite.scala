@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * materialized-view rewrite — Calcite's "aggregate navigation", Oracle's
   * query rewrite). At 100 TB this is the difference between re-scanning the
   * fact table for every dashboard grain and answering from a census-sized
-  * materialization: `register` once per session, and EVERY later aggregate
+  * materialization: `register` a rollup, and EVERY later aggregate
   * whose group keys are a subset of the rollup grain and whose aggregates
   * are re-aggregable (SUM → SUM of partial sums, COUNT → SUM of partial
   * counts, MIN/MAX → MIN/MAX of partial extrema) is navigated to the rollup
@@ -81,9 +81,10 @@ object RollupRewrite extends Rule[LogicalPlan] {
     new mutable.WeakHashMap[SparkSession, mutable.ArrayBuffer[Rollup]]
 
   /** Register a rollup for `factPath` (suffix-matched against the scan's
-    * root path) and idempotently inject this rule into the session's
-    * optimizer. The rollup DataFrame should already be persisted +
-    * materialized if navigation is to read memory rather than re-derive.
+    * root path). The rule itself is installed by `Context.local` when the
+    * session is built; with no rollup registered it leaves every plan as
+    * is. The rollup DataFrame should already be persisted + materialized
+    * if navigation is to read memory rather than re-derive.
     */
   def register(spark: SparkSession, factPath: String, keys: Set[String],
       sums: Map[String, String], countCol: String, mv: DataFrame,
@@ -99,9 +100,6 @@ object RollupRewrite extends Rule[LogicalPlan] {
       r.mins == mins && r.maxs == maxs && r.counts == counts))
     buf += Rollup(factPath, keys, sums, countCol, mins, maxs, counts,
       mv.queryExecution.optimizedPlan)
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
   }
 
   /** Drop this session's rollups (specs; a production session would

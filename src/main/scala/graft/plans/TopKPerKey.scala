@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
@@ -206,67 +206,6 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     copy(child = newChild)
 }
 
-/** Optimizer rule (the Rule[LogicalPlan] extension point): rewrites the
-  * canonical window top-k pattern
-  *   Project(Filter(rn ≤ k, Window(row_number AS rn, part, order, child)))
-  * into Project(TopKPerKey(part, order, k, child)) whenever the rank
-  * column is DISCARDED by the projection — the window sort (and Spark's
-  * own WindowGroupLimit pre-pass, which still sorts) disappear in favor
-  * of the bounded-heap operator.
-  *
-  * TIE SAFETY — the one semantic caveat, stated structurally: row_number
-  * breaks order ties ARBITRARILY, so when `orderSpec` is not a total
-  * order the window plan and the heap plan may keep different (equally
-  * valid) rows; what IS invariant under ties is the multiset of order-
-  * column values selected per key. Queries here follow the repo-wide
-  * total-order convention (orderSpec ends in a unique tie-break column —
-  * anything else could not pass a cross-engine oracle either), and the
-  * AnalyticsSpec ties fixture pins the invariant down. Sessions that
-  * cannot guarantee the convention should disable the rewrite with
-  * `spark.graft.topk.autoRewrite=false` (checked per-query below, so the
-  * gate works even after session-wide registration).
-  */
-object TopKRewrite extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, LessThan, LessThanOrEqual, Literal, NamedExpression, RowFrame, RowNumber, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Window => LWindow, WindowGroupLimit}
-
-  private def stripGroupLimit(plan: LogicalPlan): LogicalPlan = plan match {
-    // our partial pass subsumes the pre-limit — keep the plan beneath it
-    case WindowGroupLimit(_, _, _, _, child) => child
-    case other => other
-  }
-
-  private def asRowNumberWindow(w: LWindow, rn: Attribute): Boolean =
-    w.windowExpressions match {
-      case Seq(a @ Alias(WindowExpression(RowNumber(),
-          WindowSpecDefinition(_, _, SpecifiedWindowFrame(RowFrame,
-            UnboundedPreceding, CurrentRow))), _)) => a.exprId == rn.exprId
-      case _ => false
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.topk.autoRewrite", "true").toBoolean) {
-      plan
-    } else plan.transformDown {
-      case p @ Project(projList, Filter(cond, w: LWindow)) =>
-        val bound = cond match {
-          case LessThanOrEqual(a: Attribute, Literal(k: Int, _)) => Some(a -> k)
-          case LessThan(a: Attribute, Literal(k: Int, _)) => Some(a -> (k - 1))
-          case _ => None
-        }
-        bound match {
-          case Some((rn, k)) if k >= 1 && asRowNumberWindow(w, rn) &&
-              !projList.exists(_.references.exists(_.exprId == rn.exprId)) &&
-              w.partitionSpec.nonEmpty &&
-              w.partitionSpec.forall(_.isInstanceOf[Attribute]) =>
-            Project(projList.asInstanceOf[Seq[NamedExpression]],
-              TopKPerKey(w.partitionSpec, w.orderSpec, k,
-                stripGroupLimit(w.child)))
-          case _ => p
-        }
-    }
-}
-
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, order, k, child) =>
@@ -277,46 +216,9 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** User-facing construction + per-session strategy registration. */
+/** User-facing construction; `TopKStrategy` is installed by
+  * `Context.local` when the session is built. */
 object TopK {
-  /** Idempotently register the planner strategy on this session —
-    * `experimental.extraStrategies` is the runtime-injection twin of
-    * `SparkSessionExtensions.injectPlannerStrategy` (which only applies
-    * at session build time; the driver owns our sessions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-  }
-
-  /** Also inject the automatic window-top-k rewrite (Rule[LogicalPlan])
-    * — every later query on the session whose row_number ≤ k pattern
-    * drops the rank column gets the heap operator for free.
-    *
-    * Registration is SESSION-STICKY, so two properties make it safe to
-    * leave on (and both are enforced in code, not convention alone):
-    *
-    *  - memory: both exec passes are bounded — the partial heap map caps
-    *    at `spark.graft.topk.partialMaxKeys` keys and flushes on
-    *    overflow; the final pass streams sorted key groups holding one
-    *    k-heap (the sort it requires is Spark's spillable one). A
-    *    high-cardinality key can no longer OOM a task the way the
-    *    pre-round-8 unbounded map could.
-    *  - opt-out: the rewrite re-checks `spark.graft.topk.autoRewrite`
-    *    (default true) on every invocation, so a session can disable it
-    *    at any time — e.g. for queries whose window order is NOT a total
-    *    order, where row_number's arbitrary tie choice and the heap's may
-    *    keep different-but-equally-ranked rows (the order-column
-    *    multisets still agree; see TopKRewrite's tie-safety note).
-    */
-  def ensureRewriteRegistered(spark: SparkSession): Unit = synchronized {
-    ensureRegistered(spark)
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-  }
-
   /** Top `k` rows per distinct value of `keys`, best-first under `order`
     * — (column name, ascending?) pairs that must form a TOTAL order
     * (include a tie-break column) or the boundary rows are
@@ -330,11 +232,9 @@ object TopK {
     import org.apache.spark.sql.catalyst.expressions.Descending
     import org.apache.spark.sql.graftx.Bridge
     // k = 0 would surface later as an opaque NoSuchElementException on an
-    // empty heap inside a task; fail fast at plan build (the rewrite path
-    // already guards k >= 1 structurally)
+    // empty heap inside a task; fail fast at plan build
     require(k >= 1, s"top-k requires k >= 1, got $k")
     val spark = df.sparkSession
-    ensureRegistered(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Expression = analyzed.output
       .find(_.name == n)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{Text, Vectors}
+import graft.functions.Text
 
 /** Deduplication operators over `documents` / `embeddings`.
   *

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.operators.Multimodal
-import graft.functions.Vectors
 
 /** Multimodal-column queries: metadata projection (oracle-able), frame
   * sampling (oracle on counts/sizes — the frame bytes themselves are opaque),

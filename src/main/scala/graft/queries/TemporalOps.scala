@@ -278,21 +278,11 @@ object TemporalOps {
         .orderBy("user_id", "rk")
     }),
 
-    // ---- the same per-key top-3, through the NATIVE TopKPerKey operator
-    //      (graft.plans — custom LogicalPlan + SparkStrategy + SparkPlan):
-    //      partial per-partition heaps trim map-side, the exchange moves
-    //      ≤k rows per (partition, key), the final heaps merge — no
-    //      WindowExec, no per-key sort. The oracle is the row_number
-    //      formulation, proving the physical rewrite result-equal ----
-    // ---- the AUTO path: written as the canonical row_number window —
-    //      the injected TopKRewrite Rule[LogicalPlan] recognizes that the
-    //      rank column is discarded and swaps in TopKPerKey at
-    //      optimization time (PlanSpec proves no WindowExec survives).
-    //      Registration is session-sticky: every later query with the
-    //      same safe pattern gets the heap operator too, and the full
-    //      oracle sweep gates that globally ----
+    // ---- a per-key top-2 written as the canonical row_number window
+    //      with the rank column discarded: Spark's InferWindowGroupLimit
+    //      plans it as a partial and a final WindowGroupLimit ahead of
+    //      the window sort (PlanSpec pins the shape) ----
     "q_topk_auto" -> ((s, d) => {
-      graft.plans.TopK.ensureRewriteRegistered(s)
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id").asc)
       events(s, d)
@@ -305,6 +295,12 @@ object TemporalOps {
         .orderBy(col("user_id"), col("value").desc, col("event_id"))
     }),
 
+    // ---- q_topk_group's per-key top-3 through the NATIVE TopKPerKey
+    //      operator (graft.plans — custom LogicalPlan + SparkStrategy +
+    //      SparkPlan): partial per-partition heaps trim map-side, the
+    //      exchange moves ≤k rows per (partition, key), the final heaps
+    //      merge — no WindowExec, no per-key sort. The oracle is the
+    //      row_number formulation, proving the heap operator result-equal ----
     "q_topk_native" -> ((s, d) => {
       val purch = events(s, d)
         .filter(col("event_type") === "purchase")

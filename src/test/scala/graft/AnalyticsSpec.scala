@@ -381,8 +381,9 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     // ties make the CHOICE of surviving rows arbitrary (row_number's and
     // the heap's picks may legally differ) — but the multiset of order-
     // column values selected per key is fully determined. That is the
-    // invariant the rewrite's tie-safety note states, pinned here: 4 keys
-    // × 100 rows, order column v ∈ {0, 1} only
+    // invariant under which the heap operator may stand in for a
+    // row_number window, pinned here: 4 keys × 100 rows, order column
+    // v ∈ {0, 1} only
     import org.apache.spark.sql.expressions.{Window => W}
     // v must be independent of k (id%4 and id%2 are correlated — id/4
     // parity is not), so every key holds 50 ties at v=1 and 50 at v=0

@@ -10,17 +10,49 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 class MainsSpec extends AnyFunSuite with SparkSpec {
 
   test("only Context.scala builds a SparkSession") {
-    val needle = "SparkSession" + ".builder" // keeps this file off the list
+    // split literals keep this file off the list; the second needle is
+    // the runtime planner hook (`extraStrategies`/`extraOptimizations` on
+    // `spark.experimental`), which would let a query change the planner
+    val needles = Seq("SparkSession" + ".builder", "experimental" + ".extra")
     val offenders = Seq("src/main/scala", "src/test/scala").flatMap { root =>
       val walk = Files.walk(Paths.get(root))
       try walk.iterator.asScala
         .filter(p => p.toString.endsWith(".scala") &&
           p.getFileName.toString != "Context.scala" &&
-          Files.readString(p).contains(needle))
+          needles.exists(Files.readString(p).contains))
         .map(_.toString).toList
       finally walk.close()
     }
-    assert(offenders.isEmpty, s"sessions built outside Context.local: $offenders")
+    assert(offenders.isEmpty,
+      s"sessions built or planners changed outside Context.local: $offenders")
+  }
+
+  test("planner extensions come with the session, not with a query") {
+    import org.apache.spark.sql.functions.col
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    // the native top-k plans on a fresh session with no registration call
+    val df = s.range(0, 100).select((col("id") % 7).as("k"), col("id"))
+    val heaps = graft.plans.TopK.perKey(df, Seq("k"), Seq("id" -> false), 2)
+      .queryExecution.executedPlan
+      .collect { case t: graft.plans.TopKPerKeyExec => t.partial }
+    assert(heaps.sorted == Seq(false, true),
+      s"expected one partial and one final TopKPerKeyExec, got $heaps")
+    // and no query changes another's plan: these two reach row_number ≤ k
+    // windows, which q_topk_auto must leave as they were
+    val names = Seq("q_dedup_minhash", "q_dim_ablation")
+    def shapes = names.map { n =>
+      try PlanCensus.nodes(SparkEntry.queries(n)(s, sf)
+        .queryExecution.executedPlan).map(_.nodeName)
+      finally Context.release(s)
+    }
+    val before = shapes
+    try SparkEntry.queries("q_topk_auto")(s, sf).collect()
+    finally Context.release(s)
+    val moved = names.zip(before.zip(shapes)).collect {
+      case (n, (b, a)) if a != b => n
+    }
+    assert(moved.isEmpty, s"q_topk_auto changed the plan of $moved")
   }
 
   test("the plan walk sees scans and exchanges below the adaptive root") {

@@ -877,20 +877,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("top-k auto-rewrite honors its config gate") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the rewrite re-checks spark.graft.topk.autoRewrite per query, so a
-    // session can opt out even after session-sticky registration (the
-    // tie-safety escape hatch)
-    withoutAQE(withConf("spark.graft.topk.autoRewrite", "false") {
-      val plan = q("q_topk_auto").queryExecution.executedPlan
-      assert(plan.collectFirst { case t: graft.plans.TopKPerKeyExec => t }.isEmpty,
-        "rewrite fired despite the gate")
-      assert(plan.collectFirst { case w: WindowExec => w }.nonEmpty,
-        "gated plan lost its window formulation")
-    })
-  }
-
   test("basket supports and fusion legs join as broadcasts") {
     Seq("q_copurchase_rules", "q_item_sim", "q_link_predict").foreach { n =>
       val bhj = physical(n).collect { case b: BroadcastHashJoinExec => b }
@@ -952,22 +938,23 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("window-written top-k auto-rewrites to the heap operator") {
-    import org.apache.spark.sql.execution.window.WindowExec
+  test("window-written top-k plans a partial and a final WindowGroupLimit") {
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     withoutAQE {
-      // q_topk_auto is WRITTEN as row_number ≤ k — the injected
-      // Rule[LogicalPlan] must swap in TopKPerKey because rn is dropped
+      // q_topk_auto is WRITTEN as row_number ≤ k: Spark's own
+      // InferWindowGroupLimit trims each key to k rows before and after
+      // the key exchange
       val plan = q("q_topk_auto").queryExecution.executedPlan
-      assert(plan.collect { case t: graft.plans.TopKPerKeyExec => t }
-        .map(_.partial).sorted == Seq(false, true),
-        "TopKRewrite did not fire on the canonical window pattern")
-      assert(plan.collectFirst { case w: WindowExec => w }.isEmpty,
-        "window sort survived the rewrite")
+      assert(plan.collect { case l: WindowGroupLimitExec => l.mode.toString }
+        .sorted == Seq("Final", "Partial"),
+        s"expected a partial and a final WindowGroupLimitExec:\n$plan")
+      assert(plan.collectFirst { case t: graft.plans.TopKPerKeyExec => t }.isEmpty,
+        "a window-written top-k planned the heap operator")
       // and the guard: q_topk_group KEEPS its rank column, so it must
-      // still plan as a window (the rewrite may not steal rn away)
+      // still plan as a window
       val grp = q("q_topk_group").queryExecution.executedPlan
       assert(grp.collectFirst { case w: WindowExec => w }.nonEmpty,
-        "rewrite fired on a query that uses the rank column")
+        "q_topk_group lost the window that computes its rank column")
     }
   }
 
